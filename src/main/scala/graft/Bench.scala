@@ -92,6 +92,10 @@ object Bench {
       try SparkEntry.queries.get(w).foreach(_(spark, sfDir).write.format("noop").mode("overwrite").save())
       catch { case _: Throwable => () }
 
+    // A query that throws is timed as -1.0; its error class is kept (and
+    // the exception printed) so the failure is reported, not just dropped.
+    val errors = scala.collection.mutable.Map.empty[String, String]
+
     // Up to two measured passes per query, report the min: this VM's
     // host periodically steals ~all vCPUs for 60-90 s (visible as
     // steal-time spikes in /proc/stat), and a single pass randomly
@@ -103,7 +107,12 @@ object Bench {
         val fn = SparkEntry.queries(name)
         val sec =
           try time(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-          catch { case _: Throwable => -1.0 }
+          catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] $name failed: $e")
+              errors(name) = e.getClass.getName
+              -1.0
+          }
         name -> sec
       }.toMap
     // comma-separated prefixes select a subset (e.g. the scaling-curve
@@ -134,6 +143,9 @@ object Bench {
       name -> math.round(best * 1000) / 1000.0
     }
     val total = math.round(results.map(_._2).filter(_ >= 0).sum * 1000) / 1000.0
+    // queries with no successful pass: excluded from total, so named here
+    val failed = results.collect { case (n, v) if v < 0 => s""""$n":"${errors(n)}"""" }
+      .mkString("{", ",", "}")
 
     // Window-quality controls (BASELINE.md round-18 protocol): two
     // pin-free, plan-stable queries whose full-pass floor values are
@@ -163,7 +175,7 @@ object Bench {
       val qs = entries.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
         s""""steal_s":[$steal1,$steal2],"sibling_jvms":$siblingJvmsMax,""" +
-        s""""controls":$controls,"queries":$qs,"queries_omitted":$omitted,""" +
+        s""""controls":$controls,"failed":$failed,"queries":$qs,"queries_omitted":$omitted,""" +
         s""""queries_full":"bench_full.json","sf":"$sfDir"}"""
     }
     val bySlowest = results.sortBy { case (_, v) => -v }
@@ -179,7 +191,7 @@ object Bench {
     val fullQs = results.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","steal_s":[$steal1,$steal2],""" +
-        s""""sibling_jvms":$siblingJvmsMax,"controls":$controls,""" +
+        s""""sibling_jvms":$siblingJvmsMax,"controls":$controls,"failed":$failed,""" +
         s""""queries":$fullQs,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_full.json"),

@@ -40,9 +40,8 @@ object JobCount {
         jobs.set(0)
         SparkEntry.queries(name)(spark, dir)
           .write.format("noop").mode("overwrite").save()
-        // listener bus is async (and its drain API is private[spark]):
-        // settle before reading the counter — dev tool, not a bench
-        Thread.sleep(500)
+        // listener bus is async: drain it before reading the counter
+        org.apache.spark.sql.graftshim.ListenerDrain(spark.sparkContext)
         println(s"[jobs] $name ${jobs.get()}")
       } catch {
         case e: Throwable => println(s"[jobs] ERROR $name: ${e.toString.take(160)}")

@@ -29,96 +29,23 @@ object Tables {
       org.apache.spark.sql.functions.col(keyCol))
   }
 
-  /** Per-session memo of loaded RELATIONS (logical plans), keyed by
-    * (dir, table) and invalidated on the table's observed
-    * (bytes, fileCount, mtime) stat.
-    *
-    * This is the catalog role: `spark.read.parquet` costs ~60-75 ms per
-    * call (footer probe + relation/file-index construction), and a
-    * 211-query bench pass re-pays it a few hundred times for the same
-    * ten immutable files — ~10% of the whole suite's wall time spent
-    * re-deriving identical metadata (r19 measurement). A cluster
-    * deployment reads these tables through a metastore that owns
-    * exactly this metadata (see the module doc above); the memo gives
-    * the directory-contract the same property. It caches NO DATA and
-    * NO RESULTS — every query still scans the parquet at execution —
-    * and the stat-based invalidation keeps a swapped-out table visible,
-    * so behavior only differs from a bare re-read if a producer
-    * rewrites a table in-place with identical total bytes AND file
-    * count AND mtime. Weak keys: a stopped session's entries go with
-    * the session.
+  /** Loaded relation for `name`, memoized per session by
+    * [[RelationMemo]] (the catalog role: one footer probe and file index
+    * per table, not one per query).
     */
-  private val relCache = new java.util.WeakHashMap[
-    SparkSession, scala.collection.concurrent.TrieMap[(String, String), ((Long, Long, Long), DataFrame)]]()
-
-  /** Invalidation stat for a table path. A table may be a single file
-    * OR a directory of part files; a directory's own getLen is its
-    * constant inode size and its mtime granularity can swallow an
-    * in-place rewrite, so directories key on getContentSummary (total
-    * leaf bytes + file count — a rewrite that changes neither is
-    * already byte-identical in layout) plus the directory mtime.
-    */
-  private def tableStat(spark: SparkSession, path: String): Option[(Long, Long, Long)] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory) {
-        val cs = fs.getContentSummary(p)
-        Some((cs.getLength, cs.getFileCount, st.getModificationTime))
-      } else Some((st.getLen, 1L, st.getModificationTime))
-    } catch { case _: Throwable => None }
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    def fresh() =
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    RelationMemo(spark, s"$dir/$name.parquet", "load") {
       if (name == "events") loadEvents(spark, dir)
       else spark.read.parquet(s"$dir/$name.parquet")
-    tableStat(spark, s"$dir/$name.parquet") match {
-      case None => fresh() // unstattable (missing/odd scheme): let the read report
-      case Some(stat) =>
-        val perSession = relCache.synchronized {
-          var m = relCache.get(spark)
-          if (m == null) {
-            m = scala.collection.concurrent.TrieMap.empty
-            relCache.put(spark, m)
-          }
-          m
-        }
-        perSession.get((dir, name)) match {
-          case Some((s0, df)) if s0 == stat => df
-          case _ =>
-            val df = fresh()
-            perSession.put((dir, name), (stat, df))
-            df
-        }
     }
-  }
 
   /** RAW relation for `name` — no events-ts normalization — through the
     * same per-session memo (streaming sources probe the raw footer
     * schema per drain; without the memo each probe re-pays the ~60 ms
-    * relation construction). Distinct memo key from [[load]]'s.
+    * relation construction). Distinct memo tag from [[load]]'s.
     */
   def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame =
-    tableStat(spark, s"$dir/$name.parquet") match {
-      case None => spark.read.parquet(s"$dir/$name.parquet")
-      case Some(stat) =>
-        val perSession = relCache.synchronized {
-          var m = relCache.get(spark)
-          if (m == null) {
-            m = scala.collection.concurrent.TrieMap.empty
-            relCache.put(spark, m)
-          }
-          m
-        }
-        perSession.get((dir, s"$name#raw")) match {
-          case Some((s0, df)) if s0 == stat => df
-          case _ =>
-            val df = spark.read.parquet(s"$dir/$name.parquet")
-            perSession.put((dir, s"$name#raw"), (stat, df))
-            df
-        }
-    }
+    RelationMemo(spark, s"$dir/$name.parquet", "raw")(spark.read.parquet(s"$dir/$name.parquet"))
 
   /** Normalize an event-time column to session-zoned TimestampType,
     * branching on the dtype the parquet footer actually declared — the

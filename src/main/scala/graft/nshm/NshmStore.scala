@@ -59,16 +59,31 @@ final class InMemoryNshmStore(val spark: SparkSession) extends NshmStore {
 
 /** One parquet directory per table under `dir` (create-if-not-exists ≙
   * `executescript(schema.sql)`, nshmdb.py:104-117).
+  *
+  * Read contract (≙ a SQLite connection that reads its schema once and
+  * then re-checks a schema cookie per statement):
+  *  - every table is read with its declared schema ([[Schemas.all]]), so
+  *    resolving one submits no footer-inference job;
+  *  - the resolved relation is memoized per session
+  *    ([[graft.RelationMemo]]): a `table` call lists no directory and
+  *    submits no Spark job while the table is unchanged;
+  *  - the relation is re-resolved when the table directory's stat
+  *    changes (a write by another store, session or process) and after
+  *    every write this store makes itself, whatever the stat shows.
   */
 final class ParquetNshmStore(val spark: SparkSession, dir: String) extends NshmStore {
+  private def path(name: String) = s"$dir/$name"
   def create(): Unit = Schemas.all.keys.foreach { n =>
-    if (!new java.io.File(s"$dir/$n").exists())
-      Schemas.empty(spark, n).write.mode(SaveMode.Overwrite).parquet(s"$dir/$n")
+    if (!new java.io.File(path(n)).exists())
+      Schemas.empty(spark, n).write.mode(SaveMode.Overwrite).parquet(path(n))
   }
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name")
+  def table(name: String): DataFrame =
+    graft.RelationMemo(spark, path(name), "nshm")(spark.read.schema(Schemas.all(name)).parquet(path(name)))
   def append(name: String, rows: DataFrame): Unit =
-    conform(name, rows).write.mode(SaveMode.Append).parquet(s"$dir/$name")
+    try conform(name, rows).write.mode(SaveMode.Append).parquet(path(name))
+    finally graft.RelationMemo.forget(spark, path(name))
   // safe to overwrite in place: merge() hands over a materialized frame
   protected def replace(name: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(s"$dir/$name")
+    try df.write.mode(SaveMode.Overwrite).parquet(path(name))
+    finally graft.RelationMemo.forget(spark, path(name))
 }

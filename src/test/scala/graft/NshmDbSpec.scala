@@ -2,13 +2,15 @@ package graft
 
 import graft.nshm._
 
-/** Mirrors /root/reference/tests/test_nshmdb.py over an in-memory store:
-  * the Alpine-Fault micro-fixture (test_nshmdb.py:21-33) plus insert and
-  * error paths.
+/** Mirrors the reference's tests/test_nshmdb.py: the Alpine-Fault
+  * micro-fixture (test_nshmdb.py:21-33) plus insert and error paths, over
+  * whichever store `freshDb` opens — [[NshmDbSpec]] runs them in memory,
+  * [[ParquetNshmDbSpec]] on a parquet directory.
   */
-class NshmDbSpec extends SparkSpec {
+abstract class NshmDbBehaviors extends SparkSpec {
 
-  private def freshDb: NshmDb = NshmDb.inMemory(spark)
+  /** An empty database, fresh for each test. */
+  protected def freshDb: NshmDb
 
   private def alpineDb: NshmDb = {
     import spark.implicits._
@@ -249,4 +251,16 @@ class NshmDbSpec extends SparkSpec {
     val faults = db.getRuptureFaults(1L)
     assert(faults.keySet === Set("Hikurangi Interface: Section 1", "Hikurangi Interface: Section 2"))
   }
+}
+
+class NshmDbSpec extends NshmDbBehaviors {
+  protected def freshDb: NshmDb = NshmDb.inMemory(spark)
+}
+
+/** The same tests on the parquet read path: declared-schema reads, the
+  * per-session relation memo, and every insert's own-write visibility.
+  */
+class ParquetNshmDbSpec extends NshmDbBehaviors {
+  protected def freshDb: NshmDb =
+    NshmDb.open(spark, java.nio.file.Files.createTempDirectory("nshmdb_parquet").toString)
 }
