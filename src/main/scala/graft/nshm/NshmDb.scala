@@ -1,20 +1,37 @@
 package graft.nshm
 
 import graft.dsl.{BoolSetCompiler, Parser}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Spark-native equivalent of the reference `NSHMDB` facade
   * (`/root/reference/nshmdb/nshmdb.py:82-683`): one engine (no
   * sqlite-for-writes / duckdb-for-analytics split), queries are Catalyst
   * plans, the DSL compiles to `Column`s (no SQL strings), and the
-  * reference's per-result N+1 hydration loop (nshmdb.py:664-683) is a
-  * single batched join.
+  * reference's per-result N+1 hydration loop (nshmdb.py:664-683) is one
+  * batched scan of the `rupture_faults` bridge.
   *
-  * Scale notes: `fault`, `parent_fault` and the per-query pair/ID lookup
-  * frames are broadcast; the `rupture_faults` bridge is the fact side;
-  * top-k plans as TakeOrderedAndProject. Behavioral divergences from the
+  * Scale notes: the search ([[queryRuptures]]) is one plan: `fault` and
+  * `parent_fault` are broadcast, the `rupture_faults` bridge is the fact
+  * side, top-k plans as TakeOrderedAndProject. The point lookups and the
+  * hydration are not joins. Each runs at most one filtered scan of each
+  * fact table it reads (`rupture`, `rupture_faults`,
+  * `magnitude_frequency_distribution`) and assembles its answer on the
+  * driver from a snapshot of the three fault dimension tables
+  * (`parent_fault`, `fault`, `fault_plane`), so a warm `getFault` or
+  * `getFaultInfo` submits no Spark job. As join plans, the lookups ran 2
+  * to 12 jobs a warm call (broadcasts and shuffles for a few rows); the
+  * reference answers them with a few SQLite B-tree probes
+  * (nshmdb.py:368-594). The snapshot is rebuilt when the store returns a
+  * new relation for one of the three tables, which the in-memory and
+  * parquet stores do after each write to it, so it never serves rows
+  * older than the store's (a store that resolves a new relation on every
+  * call, as [[CatalogNshmStore]] does, rebuilds it on every lookup).
+  * It holds every dimension row on the driver: the dimensions are the
+  * small side (the benchmark release has 348 faults and 435 planes next
+  * to 14,000 bridge rows), and their size grows with the fault model,
+  * not with the ruptures. Behavioral divergences from the
   * reference (each deliberate, see Scaladoc on the method):
   * zero-valued bounds are honored (reference drops them via Python
   * truthiness, query.py:298-311); NOT over compound DSL expressions works
@@ -99,8 +116,9 @@ final class NshmDb(val store: NshmStore) {
   }
 
   /** ≙ NSHMDB.query (nshmdb.py:623-683): run the search, then hydrate ALL
-    * result ruptures' fault geometry in one batched join (the reference
-    * re-queries per row). Keyed by NSHM rupture id as in the reference.
+    * result ruptures' fault geometry in one batch ([[getRupturesFaults]];
+    * the reference re-queries per row). Keyed by NSHM rupture id as in
+    * the reference.
     */
   def query(
       queryStr: String,
@@ -151,49 +169,29 @@ final class NshmDb(val store: NshmStore) {
   def getRuptureFaults(ruptureId: Long): Map[String, Fault] =
     getRupturesFaults(Seq(ruptureId)).getOrElse(ruptureId, Map.empty)
 
-  /** Batched hydration: J3 4-way join + per-fault plane assembly (A9) for
-    * many ruptures at once. Plane order is made deterministic by sorting
+  /** Batched hydration for many ruptures at once: one filtered scan of
+    * the `rupture_faults` bridge, then per-fault plane assembly (A9) from
+    * the dimension snapshot. Plane order is made deterministic by sorting
     * on (parent_id, plane_id) ≙ the reference's ORDER BY f.parent_id +
     * SQLite rowid order (nshmdb.py:525).
     */
   def getRupturesFaults(ruptureIds: Seq[Long]): Map[Long, Map[String, Fault]] = {
-    if (ruptureIds.isEmpty) return Map.empty
-    val fp = faultPlane
-    val rows = fp
-      .join(ruptureFaults.as("rf"), fp("fault_id") === col("rf.fault_id"))
-      .join(broadcast(fault).as("f"), fp("fault_id") === col("f.fault_id"))
-      .join(broadcast(parentFault).as("pf"), col("f.parent_id") === col("pf.parent_id"))
-      .filter(col("rf.rupture_id").isin(ruptureIds: _*))
-      .select(
-        col("rf.rupture_id"), col("f.parent_id"), col("pf.name"),
-        col("f.fault_id"), col("f.fault_system"), fp("plane_id"),
-        fp("top_left_lat"), fp("top_left_lon"), fp("top_right_lat"), fp("top_right_lon"),
-        fp("bottom_right_lat"), fp("bottom_right_lon"), fp("bottom_left_lat"), fp("bottom_left_lon"),
-        fp("top_depth"), fp("bottom_depth"))
-      .orderBy(col("rf.rupture_id"), col("f.parent_id"), fp("plane_id"))
-      .collect()
-
-    val out = scala.collection.mutable.LinkedHashMap.empty[Long, scala.collection.mutable.LinkedHashMap[String, Vector[Plane]]]
-    rows.foreach { row =>
-      val ruptureId = row.getLong(0)
-      val parentName = row.getString(2)
-      val faultId = row.getLong(3)
-      val faultSystem = row.getInt(4)
+    val d = dims
+    val placed = for {
+      (ruptureId, faultId) <- links(ruptureIds)
+      (f, parentName) <- d.named(faultId).toSeq
+      p <- d.planes.getOrElse(faultId, Nil)
+    } yield {
       // HACK preserved from the reference (nshmdb.py:556-563): geometries
       // are only connected in the crustal setting, so subduction faults
       // are split per section.
       val faultName =
-        if (faultSystem == FaultSystem.Crustal) parentName
+        if (f.getInt(1) == FaultSystem.Crustal) parentName
         else s"$parentName: Section $faultId"
-      val plane = Plane.fromFlat(
-        row.getDouble(6), row.getDouble(7), row.getDouble(8), row.getDouble(9),
-        row.getDouble(10), row.getDouble(11), row.getDouble(12), row.getDouble(13),
-        row.getDouble(14), row.getDouble(15))
-      val byName = out.getOrElseUpdate(ruptureId, scala.collection.mutable.LinkedHashMap.empty)
-      byName(faultName) = byName.getOrElse(faultName, Vector.empty) :+ plane
+      (ruptureId, f.getLong(5), p.getLong(0), faultName, p)
     }
-    out.map { case (id, byName) =>
-      id -> byName.map { case (n, planes) => n -> Fault(planes) }.toMap
+    placed.sortBy(r => (r._1, r._2, r._3)).groupMap(_._1)(r => r._4 -> plane(r._5)).view.mapValues {
+      named => named.groupMap(_._1)(_._2).view.mapValues(ps => Fault(ps.toVector)).toMap
     }.toMap
   }
 
@@ -201,43 +199,23 @@ final class NshmDb(val store: NshmStore) {
     * apply `.toNztm` per plane for the projected view.
     */
   def getFault(faultSystem: Int, faultNshmId: Long): Fault = {
-    val fp = faultPlane
-    val rows = fp
-      .join(broadcast(fault).as("f"), fp("fault_id") === col("f.fault_id"))
-      .filter(col("f.nshm_id") === faultNshmId && col("f.fault_system") === faultSystem)
-      .select(
-        fp("plane_id"),
-        fp("top_left_lat"), fp("top_left_lon"), fp("top_right_lat"), fp("top_right_lon"),
-        fp("bottom_right_lat"), fp("bottom_right_lon"), fp("bottom_left_lat"), fp("bottom_left_lon"),
-        fp("top_depth"), fp("bottom_depth"))
-      .orderBy(fp("plane_id"))
-      .collect()
-    Fault(rows.map { r =>
-      Plane.fromFlat(
-        r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4),
-        r.getDouble(5), r.getDouble(6), r.getDouble(7), r.getDouble(8),
-        r.getDouble(9), r.getDouble(10))
-    }.toVector)
+    val d = dims
+    Fault(d.faultIds.getOrElse((faultSystem, faultNshmId), Nil)
+      .flatMap(d.planes.getOrElse(_, Nil))
+      .sortBy(_.getLong(0))
+      .map(plane)
+      .toVector)
   }
 
   /** ≙ get_fault_info (nshmdb.py:417-450); throws on a miss like the
     * reference's ValueError.
     */
   def getFaultInfo(faultSystem: Int, faultNshmId: Long): FaultInfo = {
-    val f = fault
-    f.join(broadcast(parentFault).as("p"), f("parent_id") === col("p.parent_id"))
-      .filter(f("fault_system") === faultSystem && f("nshm_id") === faultNshmId)
-      .select(f("fault_system"), f("nshm_id"), col("p.name"), f("rake"), f("tect_type"))
-      .collect()
-      .headOption
-      .map { r =>
-        FaultInfo(
-          faultSystem = r.getInt(0),
-          faultNshmId = r.getLong(1),
-          name = r.getString(2),
-          rake = r.getDouble(3),
-          tectType = if (r.isNullAt(4)) None else Some(r.getInt(4)))
-      }
+    val d = dims
+    d.faultIds.getOrElse((faultSystem, faultNshmId), Nil).iterator
+      .flatMap(d.named)
+      .map { case (f, name) => faultInfo(f, name) }
+      .nextOption()
       .getOrElse(throw new IllegalArgumentException(
         s"Could not find fault with id = $faultNshmId in fault system = $faultSystem"))
   }
@@ -248,78 +226,111 @@ final class NshmDb(val store: NshmStore) {
     * systems.
     */
   def getRuptureFaultInfo(ruptureNshmId: Long): Map[String, FaultInfo] = {
-    val f = fault
-    f.join(ruptureFaults.as("rf"), f("fault_id") === col("rf.fault_id"))
-      .join(rupture.as("r"), col("r.rupture_id") === col("rf.rupture_id"))
-      .join(broadcast(parentFault).as("p"), f("parent_id") === col("p.parent_id"))
-      .filter(col("r.nshm_id") === ruptureNshmId)
-      .select(col("p.name"), f("fault_system"), f("nshm_id"), f("rake"), f("tect_type"))
-      .collect()
-      .map { r =>
-        r.getString(0) -> FaultInfo(
-          faultSystem = r.getInt(1),
-          faultNshmId = r.getLong(2),
-          name = r.getString(0),
-          rake = r.getDouble(3),
-          tectType = if (r.isNullAt(4)) None else Some(r.getInt(4)))
-      }
+    val d = dims
+    links(ruptureIdsWhere(col("nshm_id") === ruptureNshmId))
+      .flatMap { case (_, faultId) => d.named(faultId) }
+      .map { case (f, name) => name -> faultInfo(f, name) }
       .toMap
   }
 
   /** ≙ get_fault_names (nshmdb.py:596-608). */
-  def getFaultNames: Set[String] =
-    parentFault.select("name").distinct().collect().map(_.getString(0)).toSet
+  def getFaultNames: Set[String] = dims.names.values.toSet
 
   /** ≙ get_fault_ids (nshmdb.py:610-621) — NSHM ids, not surrogates. */
-  def getFaultIds: Set[Long] =
-    fault.select("nshm_id").distinct().collect().map(_.getLong(0)).toSet
+  def getFaultIds: Set[Long] = dims.faults.values.map(_.getLong(2)).toSet
 
   /** ≙ most_likely_fault (nshmdb.py:165-248): pseudo-activity rate per
     * parent fault. F1 magnitude rounding is ceiling-with-clamp (the
     * smallest stored magnitude ≥ target, clamped to the max stored —
-    * searchsorted semantics, nshmdb.py:215-221). The dynamic OR-of-pairs
-    * predicate (J11) becomes a broadcast lookup-join on (name, magnitude).
-    * Input is an ordered Seq ≙ the reference's insertion-ordered dict.
+    * searchsorted semantics, nshmdb.py:215-221) over the magnitudes of
+    * the rupture's MFD rows. The reference's dynamic OR-of-pairs predicate
+    * (J11) becomes a lookup on (name, snapped magnitude); each distinct
+    * (name, target) pair counts once, so two targets of one parent that
+    * snap to the same magnitude count its rate twice. Input is an ordered
+    * Seq ≙ the reference's insertion-ordered dict.
+    *
+    * Three filtered scans (rupture, bridge, MFD rows of its faults), then
+    * the snap and the sums on the driver. This was once one plan with
+    * one action, the snap expressed relationally; but that one action
+    * ran 12 Spark jobs a warm call (broadcasts and shuffles over a few
+    * dozen rows), where the scans run 3.
     */
   def mostLikelyFault(
       faultSystem: Int,
       ruptureNshmId: Long,
       parentFaultMagnitudes: Seq[(String, Double)]): Map[String, Double] = {
-    import spark.implicits._
-    // One plan, one action: the rupture-restricted mfd join is built once;
-    // the F1 ceiling-with-clamp snap (nshmdb.py:215-221) is expressed
-    // relationally — distinct magnitudes × broadcast targets, then
-    // coalesce(min(mag ≥ target), max(mag)) — instead of a separate
-    // collect + driver-side searchsorted.
-    val base = mfd.as("mfd")
-      .join(ruptureFaults.as("rf"), col("rf.fault_id") === col("mfd.fault_id"))
-      .join(rupture.as("r"), col("r.rupture_id") === col("rf.rupture_id"))
-      .join(broadcast(fault).as("f"), col("f.fault_id") === col("mfd.fault_id"))
-      .join(broadcast(parentFault).as("pf"), col("f.parent_id") === col("pf.parent_id"))
-      .filter(col("r.nshm_id") === ruptureNshmId && col("r.fault_system") === faultSystem)
-      .select(
-        col("pf.name").as("pname"),
-        col("mfd.magnitude").as("magnitude"),
-        col("mfd.rate").as("rate"))
-
-    val targets = parentFaultMagnitudes.toDF("pname", "target")
-    val snapped = base
-      .select("magnitude")
-      .distinct()
-      .crossJoin(broadcast(targets))
-      .groupBy("pname", "target")
-      .agg(coalesce(
-        min(when(col("magnitude") >= col("target"), col("magnitude"))),
-        max(col("magnitude"))).as("magnitude"))
-
-    base
-      .join(broadcast(snapped.select("pname", "magnitude")), Seq("pname", "magnitude"))
-      .groupBy("pname")
-      .agg(sum(col("rate")).as("rate"))
-      .collect()
-      .map(r => r.getString(0) -> r.getDouble(1))
-      .toMap
+    val d = dims
+    val faultIds = links(ruptureIdsWhere(
+      col("nshm_id") === ruptureNshmId && col("fault_system") === faultSystem)).map(_._2)
+    val bins =
+      if (faultIds.isEmpty) Map.empty[Long, Seq[(Double, Option[Double])]]
+      else mfd
+        .filter(col("fault_id").isin(faultIds.distinct: _*) && col("magnitude").isNotNull)
+        .select("fault_id", "magnitude", "rate")
+        .collect().toSeq
+        .groupMap(_.getLong(0))(r => (r.getDouble(1), if (r.isNullAt(2)) None else Some(r.getDouble(2))))
+    // one row per rupture link and MFD row of its fault ≙ the reference's join
+    val rows = for {
+      faultId <- faultIds
+      (_, name) <- d.named(faultId).toSeq
+      (magnitude, rate) <- bins.getOrElse(faultId, Nil)
+    } yield (name, magnitude, rate)
+    if (rows.isEmpty) return Map.empty
+    val magnitudes = rows.map(_._2).distinct.sorted.toArray
+    val rateAt = rows.collect { case (name, m, Some(rate)) => (name, m) -> rate }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    parentFaultMagnitudes.distinct
+      .flatMap { case (name, target) =>
+        rateAt.get((name, NshmDb.ceilingWithClamp(magnitudes, target))).map(name -> _)
+      }
+      .groupMapReduce(_._1)(_._2)(_ + _)
   }
+
+  /** Surrogate ids of the ruptures `cond` selects: one filtered scan of
+    * `rupture`.
+    */
+  private def ruptureIdsWhere(cond: Column): Seq[Long] =
+    rupture.filter(cond).select("rupture_id").collect().map(_.getLong(0)).toSeq
+
+  /** The (rupture_id, fault_id) links of `ruptureIds`, one per bridge
+    * row: one filtered scan of `rupture_faults`, none for no ids.
+    */
+  private def links(ruptureIds: Seq[Long]): Seq[(Long, Long)] =
+    if (ruptureIds.isEmpty) Nil
+    else ruptureFaults
+      .filter(col("rupture_id").isin(ruptureIds: _*) && col("fault_id").isNotNull)
+      .select("rupture_id", "fault_id")
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .toSeq
+
+  @volatile private var snapshot: Option[NshmDb.Dims] = None
+
+  /** The dimension snapshot of the relations the store returns now:
+    * rebuilt (three collects) when any of them is a new relation.
+    */
+  private def dims: NshmDb.Dims = {
+    val (pf, f, fp) = (parentFault, fault, faultPlane)
+    snapshot.filter(_.isOf(pf, f, fp)).getOrElse {
+      val fresh = new NshmDb.Dims(pf, f, fp)
+      snapshot = Some(fresh)
+      fresh
+    }
+  }
+
+  private def faultInfo(f: Row, name: String): FaultInfo =
+    FaultInfo(
+      faultSystem = f.getInt(1),
+      faultNshmId = f.getLong(2),
+      name = name,
+      rake = f.getDouble(3),
+      tectType = if (f.isNullAt(4)) None else Some(f.getInt(4)))
+
+  private def plane(p: Row): Plane =
+    Plane.fromFlat(
+      p.getDouble(1), p.getDouble(2), p.getDouble(3), p.getDouble(4),
+      p.getDouble(5), p.getDouble(6), p.getDouble(7), p.getDouble(8),
+      p.getDouble(9), p.getDouble(10))
 
   // ------------------------------------------------------------- inserts
 
@@ -459,6 +470,45 @@ object NshmDb {
     val i = java.util.Arrays.binarySearch(sorted, target)
     val idx = if (i >= 0) i else -(i + 1) // first index with sorted(idx) >= target
     sorted(math.min(idx, sorted.length - 1))
+  }
+
+  /** Driver-side rows of `parent_fault`, `fault` and `fault_plane` for
+    * one version of each: the relations the store returned, kept to tell
+    * when the store returns new ones. Rows are selected in declared
+    * column order ([[Schemas]]) and read only by the lookup that needs
+    * them, so a bad value fails that lookup, not the snapshot.
+    */
+  private final class Dims(pf: DataFrame, f: DataFrame, fp: DataFrame) {
+    def isOf(pf2: DataFrame, f2: DataFrame, fp2: DataFrame): Boolean =
+      (pf eq pf2) && (f eq f2) && (fp eq fp2)
+
+    // a store may keep another column order (partition columns last)
+    private def rows(df: DataFrame, schema: StructType): Seq[Row] =
+      df.select(schema.fieldNames.toSeq.map(col): _*).collect().toSeq
+
+    /** parent_id → name. */
+    val names: Map[Long, String] = rows(pf, Schemas.parentFault).map(r => r.getLong(0) -> r.getString(1)).toMap
+    /** fault_id → fault row. */
+    val faults: Map[Long, Row] = rows(f, Schemas.fault).map(r => r.getLong(0) -> r).toMap
+    /** (fault_system, nshm_id) → fault ids, ascending. */
+    val faultIds: Map[(Int, Long), Seq[Long]] = faults.values.toSeq
+      .filter(r => !r.isNullAt(1) && !r.isNullAt(2))
+      .groupMap(r => (r.getInt(1), r.getLong(2)))(_.getLong(0))
+      .view.mapValues(_.sorted).toMap
+    /** fault_id → plane rows, by plane_id. */
+    val planes: Map[Long, Seq[Row]] = rows(fp, Schemas.faultPlane)
+      .filter(!_.isNullAt(11))
+      .groupBy(_.getLong(11))
+      .view.mapValues(_.sortBy(_.getLong(0))).toMap
+
+    /** The fault row and its parent's name, if both exist ≙ the inner
+      * join of `fault` and `parent_fault`.
+      */
+    def named(faultId: Long): Option[(Row, String)] =
+      for {
+        f <- faults.get(faultId) if !f.isNullAt(5)
+        name <- names.get(f.getLong(5))
+      } yield (f, name)
   }
 
   def inMemory(spark: SparkSession): NshmDb = new NshmDb(new InMemoryNshmStore(spark))

@@ -70,6 +70,12 @@ final class InMemoryNshmStore(val spark: SparkSession) extends NshmStore {
   *  - the relation is re-resolved when the table directory's stat
   *    changes (a write by another store, session or process) and after
   *    every write this store makes itself, whatever the stat shows.
+  *
+  * The memo caches relations, no data: every read scans the files. Rows
+  * are cached one level up: [[NshmDb]] keeps the rows of `parent_fault`,
+  * `fault` and `fault_plane` for the relation it last saw of each, and
+  * reads them again when `table` returns a new relation, so a write
+  * that re-resolves the relation also refreshes those rows.
   */
 final class ParquetNshmStore(val spark: SparkSession, dir: String) extends NshmStore {
   private def path(name: String) = s"$dir/$name"

@@ -251,6 +251,146 @@ abstract class NshmDbBehaviors extends SparkSpec {
     val faults = db.getRuptureFaults(1L)
     assert(faults.keySet === Set("Hikurangi Interface: Section 1", "Hikurangi Interface: Section 2"))
   }
+
+  /** A `fault_plane` row whose corners are a 1° square with its top edge
+    * at `lat`: the latitude tells the planes apart.
+    */
+  private def planeRow(planeId: Long, lat: Double, faultId: Long) =
+    (planeId, lat, 172.0, lat, 173.0, lat - 1, 173.0, lat - 1, 172.0, 0.0, 10.0, faultId)
+
+  private def appendPlanes(db: NshmDb, rows: (Long, Double, Double, Double, Double, Double,
+      Double, Double, Double, Double, Double, Long)*): Unit = {
+    import spark.implicits._
+    db.store.append(
+      "fault_plane",
+      rows.toDF("plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
+        "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
+        "top_depth", "bottom_depth", "fault_id"))
+  }
+
+  private def topLats(f: Fault): Vector[Double] = f.planes.map(_.corners(0)(0))
+
+  test("get_fault on a multi-plane fault returns its planes ordered by plane_id") {
+    import spark.implicits._
+    val db = freshDb
+    db.store.append("parent_fault", Seq((1L, "Alpine Fault")).toDF("parent_id", "name"))
+    db.store.append(
+      "fault",
+      Seq((1L, 3, 1L, 90.0, Option.empty[Int], 1L), (2L, 3, 2L, 90.0, Option.empty[Int], 1L))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    // written out of order, over two appends, with another fault's plane between
+    appendPlanes(db, planeRow(3L, -44.0, 1L), planeRow(2L, -30.0, 2L))
+    appendPlanes(db, planeRow(1L, -42.0, 1L), planeRow(4L, -45.0, 1L))
+    assert(topLats(db.getFault(FaultSystem.Crustal, 1L)) === Vector(-42.0, -44.0, -45.0))
+    assert(topLats(db.getFault(FaultSystem.Crustal, 2L)) === Vector(-30.0))
+    assert(db.getFault(FaultSystem.Hikurangi, 1L).planes.isEmpty)
+  }
+
+  test("hydration keys subduction sections by \"<name>: Section <id>\" and orders planes by (parent_id, plane_id)") {
+    import spark.implicits._
+    val db = freshDb
+    db.store.append(
+      "parent_fault", Seq((1L, "Hikurangi Interface"), (2L, "Alpine Fault")).toDF("parent_id", "name"))
+    db.store.append(
+      "fault",
+      Seq(
+        (1L, 1, 1L, 90.0, Option.empty[Int], 1L), (2L, 1, 2L, 90.0, Option.empty[Int], 1L),
+        (3L, 3, 3L, 0.0, Option.empty[Int], 2L), (4L, 3, 4L, 0.0, Option.empty[Int], 2L))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    appendPlanes(db,
+      planeRow(3L, -41.0, 1L), planeRow(1L, -40.0, 1L), planeRow(4L, -43.0, 2L), planeRow(2L, -42.0, 2L),
+      // the crustal parent's two sections merge under its name, plane_id order across both
+      planeRow(6L, -30.0, 3L), planeRow(5L, -31.0, 4L))
+    db.store.append(
+      "rupture",
+      Seq((1L, 1, 1L, 100.0, 8.0, 10.0, 0.001), (2L, 3, 1L, 50.0, 7.0, 5.0, 0.01))
+        .toDF("rupture_id", "fault_system", "nshm_id", "area", "magnitude", "len", "rate"))
+    db.store.append(
+      "rupture_faults",
+      Seq((1L, 1L, 2L), (2L, 1L, 1L), (3L, 2L, 3L), (4L, 2L, 4L))
+        .toDF("rupture_fault_id", "rupture_id", "fault_id"))
+    val hydrated = db.getRupturesFaults(Seq(1L, 2L, 3L))
+    assert(hydrated.keySet === Set(1L, 2L))
+    assert(hydrated(1L).view.mapValues(topLats).toMap === Map(
+      "Hikurangi Interface: Section 1" -> Vector(-40.0, -41.0),
+      "Hikurangi Interface: Section 2" -> Vector(-42.0, -43.0)))
+    assert(hydrated(2L).view.mapValues(topLats).toMap === Map("Alpine Fault" -> Vector(-31.0, -30.0)))
+    assert(db.getRupture(FaultSystem.Hikurangi, 1L).faults === hydrated(1L))
+  }
+
+  /** Rupture (Crustal, 1) spans Alpine Fault (MFD 6.0 → 0.5, 7.0 → 0.25)
+    * and Kakapo (6.5 → 0.125); Hope Fault (6.2 → 1.0) is outside it.
+    * Rupture (Crustal, 2) spans only Wairau, which has no MFD rows.
+    */
+  private def mfdDb: NshmDb = {
+    import spark.implicits._
+    val db = freshDb
+    db.store.append(
+      "parent_fault",
+      Seq((1L, "Alpine Fault"), (2L, "Kakapo"), (3L, "Hope Fault"), (4L, "Wairau"))
+        .toDF("parent_id", "name"))
+    db.store.append(
+      "fault",
+      (1L to 4L).map(i => (i, 3, i, 90.0, Option.empty[Int], i))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    db.store.append(
+      "rupture",
+      Seq((1L, 3, 1L, 100.0, 7.0, 10.0, 0.01), (2L, 3, 2L, 50.0, 6.5, 5.0, 0.02))
+        .toDF("rupture_id", "fault_system", "nshm_id", "area", "magnitude", "len", "rate"))
+    db.store.append(
+      "rupture_faults",
+      Seq((1L, 1L, 1L), (2L, 1L, 2L), (3L, 2L, 4L)).toDF("rupture_fault_id", "rupture_id", "fault_id"))
+    db.store.append(
+      "magnitude_frequency_distribution",
+      Seq((1L, 1L, 6.0, 0.5), (2L, 1L, 7.0, 0.25), (3L, 2L, 6.5, 0.125), (4L, 3L, 6.2, 1.0))
+        .toDF("entry_id", "fault_id", "magnitude", "rate"))
+    db
+  }
+
+  test("most_likely_fault counts a rate once per distinct (name, target) pair") {
+    val db = mfdDb
+    def mlf(targets: (String, Double)*) = db.mostLikelyFault(FaultSystem.Crustal, 1L, targets)
+    // 6.7 and 6.9 both snap to 7.0: two pairs, the 7.0 rate counted twice
+    assert(mlf("Alpine Fault" -> 6.7, "Alpine Fault" -> 6.9) === Map("Alpine Fault" -> 0.5))
+    // a duplicated identical pair is one pair
+    assert(mlf("Alpine Fault" -> 6.7, "Alpine Fault" -> 6.7) === Map("Alpine Fault" -> 0.25))
+    // the two targets snap apart: 6.0 and 7.0
+    assert(mlf("Alpine Fault" -> 5.0, "Alpine Fault" -> 6.9) === Map("Alpine Fault" -> 0.75))
+  }
+
+  test("most_likely_fault snaps over the rupture's magnitudes and drops parents outside it") {
+    val db = mfdDb
+    def mlf(targets: (String, Double)*) = db.mostLikelyFault(FaultSystem.Crustal, 1L, targets)
+    // the rupture's magnitudes are {6.0, 6.5, 7.0}: Hope Fault's 6.2 is not among them
+    assert(mlf("Kakapo" -> 6.1) === Map("Kakapo" -> 0.125))
+    // Alpine Fault has no row at the snapped 6.5
+    assert(mlf("Alpine Fault" -> 6.1, "Kakapo" -> 6.1) === Map("Kakapo" -> 0.125))
+    // a target parent not in the rupture, known to the database or not
+    assert(mlf("Alpine Fault" -> 6.0, "Hope Fault" -> 6.2, "Nowhere" -> 6.0) === Map("Alpine Fault" -> 0.5))
+  }
+
+  test("most_likely_fault of a rupture without MFD rows or of an unknown rupture is empty") {
+    val db = mfdDb
+    assert(db.mostLikelyFault(FaultSystem.Crustal, 2L, Seq("Wairau" -> 6.5)) === Map.empty)
+    assert(db.mostLikelyFault(FaultSystem.Crustal, 99L, Seq("Alpine Fault" -> 6.5)) === Map.empty)
+    assert(db.mostLikelyFault(FaultSystem.Hikurangi, 1L, Seq("Alpine Fault" -> 6.5)) === Map.empty)
+  }
+
+  test("lookups see faults inserted through the same NshmDb after they have run") {
+    val db = freshDb
+    db.insertManyFaults(Seq(FaultInfo(FaultSystem.Crustal, 1L, "Fault A", 90.0, None)))
+    assert(db.getFaultInfo(FaultSystem.Crustal, 1L).name === "Fault A")
+    assert(db.getFault(FaultSystem.Crustal, 2L).planes.isEmpty)
+    assert(db.getFaultNames === Set("Fault A"))
+    assert(db.getFaultIds === Set(1L))
+    db.insertManyFaults(Seq(FaultInfo(
+      FaultSystem.Crustal, 2L, "Alpine Fault", 45.0, Some(1), Some(Fault(Vector(Plane(alpineCorners)))))))
+    assert(db.getFaultInfo(FaultSystem.Crustal, 2L) ===
+      FaultInfo(FaultSystem.Crustal, 2L, "Alpine Fault", 45.0, Some(1)))
+    assert(db.getFault(FaultSystem.Crustal, 2L).corners === alpineCorners)
+    assert(db.getFaultNames === Set("Fault A", "Alpine Fault"))
+    assert(db.getFaultIds === Set(1L, 2L))
+  }
 }
 
 class NshmDbSpec extends NshmDbBehaviors {

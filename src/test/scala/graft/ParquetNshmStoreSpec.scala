@@ -110,6 +110,91 @@ class ParquetNshmStoreSpec extends SparkSpec {
     assert(db.getFaultInfo(FaultSystem.Crustal, 1L) === want)
     val (info, jobs) = jobsOf(db.getFaultInfo(FaultSystem.Crustal, 1L))
     assert(info === want)
-    assert(jobs <= 2, s"warm getFaultInfo submitted $jobs jobs")
+    // the budget is now 0: the fault dimension tables are served from the
+    // NshmDb's snapshot
+    assert(jobs === 0, s"warm getFaultInfo submitted $jobs jobs")
+  }
+
+  /** A store holding one crustal rupture over two faults of two parents,
+    * each fault with one plane and one MFD row.
+    */
+  private def ruptureStore(): (ParquetNshmStore, String) = {
+    val (store, dir) = freshStore()
+    store.append("parent_fault", Seq((1L, "Fault A"), (2L, "Fault B")).toDF("parent_id", "name"))
+    store.append(
+      "fault",
+      Seq((1L, 3, 1L, 90.0, Option.empty[Int], 1L), (2L, 3, 2L, 45.0, Option.empty[Int], 2L))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    store.append(
+      "fault_plane",
+      Seq(1L, 2L).map(i => (i, -42.0, 172.0, -42.0, 173.0, -43.0, 173.0, -43.0, 172.0, 0.0, 10.0, i))
+        .toDF("plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
+          "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
+          "top_depth", "bottom_depth", "fault_id"))
+    store.append(
+      "rupture",
+      Seq((1L, 3, 1L, 100.0, 7.0, 10.0, 0.01))
+        .toDF("rupture_id", "fault_system", "nshm_id", "area", "magnitude", "len", "rate"))
+    store.append(
+      "rupture_faults", Seq((1L, 1L, 1L), (2L, 1L, 2L)).toDF("rupture_fault_id", "rupture_id", "fault_id"))
+    store.append(
+      "magnitude_frequency_distribution",
+      Seq((1L, 1L, 7.0, 0.5), (2L, 2L, 7.0, 0.25)).toDF("entry_id", "fault_id", "magnitude", "rate"))
+    (store, dir)
+  }
+
+  test("job budget: warm point lookups and hydration on a parquet store") {
+    val db = new NshmDb(ruptureStore()._1)
+    val budgets: Seq[(String, Int, () => Any)] = Seq(
+      ("getFault", 0, () => db.getFault(FaultSystem.Crustal, 1L)),
+      ("getFaultNames", 0, () => db.getFaultNames),
+      ("getFaultIds", 0, () => db.getFaultIds),
+      ("getRupture", 2, () => db.getRupture(FaultSystem.Crustal, 1L)),
+      ("getRuptureFaultInfo", 2, () => db.getRuptureFaultInfo(1L)),
+      ("mostLikelyFault", 3, () => db.mostLikelyFault(FaultSystem.Crustal, 1L, Seq("Fault A" -> 7.0))),
+      ("getRupturesFaults", 1, () => db.getRupturesFaults(Seq(1L))))
+    val over = budgets.flatMap { case (name, budget, call) =>
+      val cold = call()
+      val (warm, jobs) = jobsOf(call())
+      assert(warm === cold, name)
+      if (jobs > budget) Some(s"warm $name submitted $jobs jobs, budget $budget") else None
+    }
+    assert(over.isEmpty, over.mkString("; "))
+    assert(db.getRupture(FaultSystem.Crustal, 1L).faults.keySet === Set("Fault A", "Fault B"))
+    assert(db.mostLikelyFault(FaultSystem.Crustal, 1L, Seq("Fault A" -> 7.0)) === Map("Fault A" -> 0.5))
+  }
+
+  test("lookups see faults appended by a second store, in the same session and in another") {
+    val (store, dir) = freshStore()
+    store.append("parent_fault", Seq((1L, "Fault A")).toDF("parent_id", "name"))
+    store.append(
+      "fault",
+      Seq((1L, 3, 1L, 90.0, Option.empty[Int], 1L))
+        .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+    val db = new NshmDb(store)
+    assert(db.getFaultNames === Set("Fault A"))
+    def addFault(writer: ParquetNshmStore, id: Long, name: String): Unit = {
+      val ws = writer.spark
+      import ws.implicits._
+      writer.append("parent_fault", Seq((id, name)).toDF("parent_id", "name"))
+      writer.append(
+        "fault",
+        Seq((id, 3, id, 45.0, Option.empty[Int], id))
+          .toDF("fault_id", "fault_system", "nshm_id", "rake", "tect_type", "parent_id"))
+      writer.append(
+        "fault_plane",
+        Seq((id, -42.0, 172.0, -42.0, 173.0, -43.0, 173.0, -43.0, 172.0, 0.0, 10.0, id))
+          .toDF("plane_id", "top_left_lat", "top_left_lon", "top_right_lat", "top_right_lon",
+            "bottom_right_lat", "bottom_right_lon", "bottom_left_lat", "bottom_left_lon",
+            "top_depth", "bottom_depth", "fault_id"))
+    }
+    addFault(new ParquetNshmStore(spark, dir), 2L, "Fault B")
+    assert(db.getFaultInfo(FaultSystem.Crustal, 2L) === FaultInfo(FaultSystem.Crustal, 2L, "Fault B", 45.0, None))
+    assert(db.getFault(FaultSystem.Crustal, 2L).planes.size === 1)
+    assert(db.getFaultNames === Set("Fault A", "Fault B"))
+    addFault(new ParquetNshmStore(spark.newSession(), dir), 3L, "Fault C")
+    assert(db.getFaultInfo(FaultSystem.Crustal, 3L) === FaultInfo(FaultSystem.Crustal, 3L, "Fault C", 45.0, None))
+    assert(db.getFault(FaultSystem.Crustal, 3L).planes.size === 1)
+    assert(db.getFaultNames === Set("Fault A", "Fault B", "Fault C"))
   }
 }
